@@ -1,7 +1,7 @@
 package graft.job
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -42,15 +42,6 @@ object ChangeConsumer {
     }
   }
 
-  private def writeCheckpoint(ckptFile: String, seq: Int): Unit = {
-    val target = Paths.get(ckptFile)
-    Option(target.getParent).foreach(Files.createDirectories(_))
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    Files.write(tmp, seq.toString.getBytes(UTF_8))
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
   /** One consumption cycle: process rows added by snapshots
     * `(lastConsumed, currentSequence]`, then advance the checkpoint.
     * Returns the consumed window (from, to]; an empty window (nothing
@@ -65,7 +56,7 @@ object ChangeConsumer {
       s"checkpoint $ckptFile is ahead of the chain ($from > $to) — wrong root or rolled-back store")
     if (to > from) {
       process(ExtractJob.readChanges(spark, snapshotRoot, from, to), from, to)
-      writeCheckpoint(ckptFile, to)
+      SnapshotStore.writeAtomic(Paths.get(ckptFile).toAbsolutePath, to.toString.getBytes(UTF_8))
     }
     (from, to)
   }

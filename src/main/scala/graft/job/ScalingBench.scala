@@ -107,14 +107,9 @@ object ScalingBench {
     val n = if (args.length > 1) args(1).toInt else 8
     val reps = if (args.length > 2) args(2).toInt else 5
     val n4 = n * 4
-    val pagesPath = s"/tmp/graft_pages_cache/g${graft.gen.PageGen.GenVersion}-rows$rows"
-
     // generate once (untimed)
-    if (!new java.io.File(s"$pagesPath/_SUCCESS").exists()) {
-      val s = session(n4)
-      ExtractJob.generatePages(s, rows, pagesPath)
-      s.stop()
-    }
+    val gen = session(n4)
+    val pagesPath = try Staged.pages(gen, rows) finally gen.stop()
     val splitBytes = splitBytesFor(pagesPath, n4)
     // warmup JVM/JIT on a slice (untimed, separate session)
     val w = session(n, splitBytes)

@@ -14,11 +14,8 @@ object ScalingDiag {
     val rows = if (args.length > 0) args(0).toInt else 1000000
     val n = if (args.length > 1) args(1).toInt else 8
     val reps = if (args.length > 2) args(2).toInt else 3
-    val pagesPath = s"/tmp/graft_pages_cache/g${graft.gen.PageGen.GenVersion}-rows$rows"
-    if (!new java.io.File(s"$pagesPath/_SUCCESS").exists()) {
-      val s = ScalingBench.session(n * 4)
-      try ExtractJob.generatePages(s, rows, pagesPath) finally s.stop()
-    }
+    val gen = ScalingBench.session(n * 4)
+    val pagesPath = try Staged.pages(gen, rows) finally gen.stop()
 
     def extractOnly(spark: org.apache.spark.sql.SparkSession): Double = {
       val t0 = System.nanoTime()

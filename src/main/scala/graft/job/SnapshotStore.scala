@@ -156,7 +156,9 @@ object SnapshotStore {
     new String(Files.readAllBytes(Paths.get(root, "snapshots", s"v$seq.json")), UTF_8)
   }
 
-  private def writeAtomic(target: Path, bytes: Array[Byte]): Unit = {
+  /** Single-file publish: write a sibling temp file, then rename it over
+    * `target` (manifests, the version hint, consumer checkpoints). */
+  private[job] def writeAtomic(target: Path, bytes: Array[Byte]): Unit = {
     val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
     Files.createDirectories(target.getParent)
     Files.write(tmp, bytes)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.job.ExtractJob
+import graft.job.{ExtractJob, Staged}
 import graft.ops.{Balance, Decontam, Dedup, Packing, Repetition, Similarity, TextStats, UrlCanon}
 
 /** The SURVEY.md §2 operator inventory expressed as runnable queries
@@ -24,16 +24,32 @@ object GraftQueries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  // ---- synthesized pages cache (deterministic; generated once/JVM) ----
-  private val genLock = new Object
-  def pagesDumpPath(rows: Int): String =
-    s"/tmp/graft_pages_cache/g${graft.gen.PageGen.GenVersion}-rows$rows"
-  def pagesPath(spark: SparkSession, sfDir: String): String = genLock.synchronized {
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = pagesDumpPath(rows)
-    val marker = new java.io.File(s"$path/_SUCCESS")
-    if (!marker.exists()) ExtractJob.generatePages(spark, rows, path)
-    path
+  // ---- synthesized pages cache (deterministic; generated once) ----
+  def pagesDumpPath(rows: Int): String = Staged.pagesPath(rows)
+  def pagesPath(spark: SparkSession, sfDir: String): String =
+    Staged.pages(spark, graft.gen.PageGen.rowsForDir(sfDir))
+
+  /** Every staged dump below goes through [[Staged.publishDir]]: built
+    * once into a temp dir, marked, then moved into place atomically. This
+    * is its parquet form — `build` is written at `path` unless a complete
+    * dump is already there, and the dump is read back. */
+  private def cachedParquet(spark: SparkSession, path: String)(build: => DataFrame): DataFrame = {
+    Staged.publishDir(path)(build.write.parquet(_))
+    spark.read.parquet(path)
+  }
+
+  /** Run `body` with 8 MB scan splits (the CPU-bound extraction and
+    * form-detection passes), then restore the session's value, so a cold
+    * build can't skew every later query's scan planning (round-3
+    * ADVICE #3). */
+  private def withSplitBytes[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, (8L << 20).toString)
+    try body finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   /** Deterministic WARC fixture: a 1-in-20 subset of the generated
@@ -43,42 +59,19 @@ object GraftQueries {
     * oracle computes the SAME aggregate over the pages PARQUET subset —
     * equality proves the write→gzip→parse roundtrip preserved every
     * url, lang, payload byte, and timestamp (S5 as a driver-visible,
-    * value-checked query; round-2 VERDICT next-round #6). */
+    * value-checked query; round-2 VERDICT next-round #6). Segments are
+    * written into a fresh temp dir, so a crash mid-write (or a
+    * partition-count change between runs) never leaves a partial or
+    * mixed-segment dir behind the marker. */
   def warcDumpPath(rows: Int): String =
     s"/tmp/graft_warc_cache/g${graft.gen.PageGen.GenVersion}-rows$rows"
 
   private def warcCached(spark: SparkSession, sfDir: String): String = {
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = warcDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_DONE").exists()) {
-        // same temp-dir + atomic-rename discipline as atomicDump: a
-        // crash mid-writeSegments (or a partition-count change between
-        // runs) must never leave a partially-written or mixed-segment
-        // dir behind the _DONE-guarded path
-        import java.nio.file._
-        val tmp = path + ".tmp-" + ProcessHandle.current().pid()
-        deleteRecursively(new java.io.File(tmp))
-        val subset = ExtractJob.readPages(spark, pagesPath(spark, sfDir))
-          .filter(expr("cast(regexp_extract(url, '/page/([0-9]+)$', 1) as long) % 20 = 0"))
-        graft.sources.Warc.writeSegments(subset, tmp, compress = true)
-        Files.write(Paths.get(tmp, "_DONE"), Array.emptyByteArray)
-        val dest = Paths.get(path)
-        try {
-          Files.createDirectories(dest.getParent)
-          Files.move(Paths.get(tmp), dest, StandardCopyOption.ATOMIC_MOVE)
-        } catch {
-          case _: FileAlreadyExistsException | _: DirectoryNotEmptyException =>
-            if (Files.exists(dest.resolve("_DONE"))) deleteRecursively(new java.io.File(tmp))
-            else {
-              deleteRecursively(dest.toFile)
-              try Files.move(Paths.get(tmp), dest, StandardCopyOption.ATOMIC_MOVE)
-              catch { case _: FileAlreadyExistsException | _: DirectoryNotEmptyException =>
-                deleteRecursively(new java.io.File(tmp))
-              }
-            }
-        }
-      }
+    val path = warcDumpPath(graft.gen.PageGen.rowsForDir(sfDir))
+    Staged.publishDir(path) { tmp =>
+      val subset = ExtractJob.readPages(spark, pagesPath(spark, sfDir))
+        .filter(expr("cast(regexp_extract(url, '/page/([0-9]+)$', 1) as long) % 20 = 0"))
+      graft.sources.Warc.writeSegments(subset, tmp, compress = true)
     }
     path
   }
@@ -96,69 +89,17 @@ object GraftQueries {
 
   private def wetCached(spark: SparkSession, sfDir: String): String = {
     import spark.implicits._
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = wetDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_DONE").exists()) {
-        import java.nio.file._
-        val tmp = path + ".tmp-" + ProcessHandle.current().pid()
-        deleteRecursively(new java.io.File(tmp))
-        val subset = extractedCached(spark, sfDir)
-          .filter(expr("cast(regexp_extract(url, '/page/([0-9]+)$', 1) as long) % 20 = 0")
-            && col("error").isNull)
-          .select(col("url"), col("warc_ts"), col("lang"),
-            col("extracted_text").as("text"))
-          .as[graft.sources.Wet.WetRecord]
-        graft.sources.Wet.writeSegments(subset, tmp, compress = true)
-        Files.write(Paths.get(tmp, "_DONE"), Array.emptyByteArray)
-        val dest = Paths.get(path)
-        try {
-          Files.createDirectories(dest.getParent)
-          Files.move(Paths.get(tmp), dest, StandardCopyOption.ATOMIC_MOVE)
-        } catch {
-          case _: FileAlreadyExistsException | _: DirectoryNotEmptyException =>
-            if (Files.exists(dest.resolve("_DONE"))) deleteRecursively(new java.io.File(tmp))
-            else {
-              deleteRecursively(dest.toFile)
-              try Files.move(Paths.get(tmp), dest, StandardCopyOption.ATOMIC_MOVE)
-              catch { case _: FileAlreadyExistsException | _: DirectoryNotEmptyException =>
-                deleteRecursively(new java.io.File(tmp))
-              }
-            }
-        }
-      }
+    val path = wetDumpPath(graft.gen.PageGen.rowsForDir(sfDir))
+    Staged.publishDir(path) { tmp =>
+      val subset = extractedCached(spark, sfDir)
+        .filter(expr("cast(regexp_extract(url, '/page/([0-9]+)$', 1) as long) % 20 = 0")
+          && col("error").isNull)
+        .select(col("url"), col("warc_ts"), col("lang"),
+          col("extracted_text").as("text"))
+        .as[graft.sources.Wet.WetRecord]
+      graft.sources.Wet.writeSegments(subset, tmp, compress = true): Unit
     }
     path
-  }
-
-  /** Crash-safe build-once scaffold for DIRECTORY fixtures (the q101 /
-    * q104 chain and crawl-diff stores): build under a pid-suffixed tmp
-    * dir, certify with _DONE, then ATOMIC_MOVE into place — a loser of
-    * the cross-process race deletes its tmp; a corrupt leftover
-    * (no _DONE) is replaced. One copy of the race handling, shared by
-    * every fixture cache. */
-  private def buildCachedDir(path: String)(build: String => Unit): Unit = {
-    import java.nio.file._
-    if (new java.io.File(s"$path/_DONE").exists()) return
-    val tmp = path + ".tmp-" + ProcessHandle.current().pid()
-    deleteRecursively(new java.io.File(tmp))
-    build(tmp)
-    Files.write(Paths.get(tmp, "_DONE"), Array.emptyByteArray)
-    val dest = Paths.get(path)
-    try {
-      Files.createDirectories(dest.getParent)
-      Files.move(Paths.get(tmp), dest, StandardCopyOption.ATOMIC_MOVE)
-    } catch {
-      case _: FileAlreadyExistsException | _: DirectoryNotEmptyException =>
-        if (Files.exists(dest.resolve("_DONE"))) deleteRecursively(new java.io.File(tmp))
-        else {
-          deleteRecursively(dest.toFile)
-          try Files.move(Paths.get(tmp), dest, StandardCopyOption.ATOMIC_MOVE)
-          catch { case _: FileAlreadyExistsException | _: DirectoryNotEmptyException =>
-            deleteRecursively(new java.io.File(tmp))
-          }
-        }
-    }
   }
 
   /** Deterministic snapshot-CHAIN fixture (q101 — S10/W2 promoted from
@@ -179,30 +120,28 @@ object GraftQueries {
   private def chainCached(spark: SparkSession, sfDir: String): String = {
     val rows = chainRowsFor(sfDir)
     val path = chainDumpPath(rows)
-    genLock.synchronized {
-      buildCachedDir(path) { tmp =>
-        import java.nio.file._
-        ExtractJob.generatePages(spark, rows, s"$tmp/pages", partitions = 8)
-        // increment 1: hold back half the input files (the
-        // file-granular resume treats files as the unit of work)
-        val pagesDir = new java.io.File(s"$tmp/pages")
-        val files = pagesDir.listFiles()
-          .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .sortBy(_.getName)
-        val hold = new java.io.File(s"$tmp/hold"); hold.mkdirs()
-        val held = files.drop(files.length / 2)
-        held.foreach(f => Files.move(f.toPath,
-          new java.io.File(hold, f.getName).toPath))
-        ExtractJob.run(spark, s"$tmp/pages", s"$tmp/out", numPartitions = 8)
-        // increment 2: the held files arrive; resume scans ONLY them
-        held.foreach(f => Files.move(new java.io.File(hold, f.getName).toPath,
-          new java.io.File(pagesDir, f.getName).toPath))
-        ExtractJob.run(spark, s"$tmp/pages", s"$tmp/out", numPartitions = 8)
-        // no-op resume: a 0-row snapshot with an empty partitions array
-        ExtractJob.run(spark, s"$tmp/pages", s"$tmp/out", numPartitions = 8)
-        // compaction: one clustered dir replacing the live chain
-        ExtractJob.compact(spark, s"$tmp/out"): Unit
-      }
+    Staged.publishDir(path) { tmp =>
+      import java.nio.file._
+      ExtractJob.generatePages(spark, rows, s"$tmp/pages", partitions = 8)
+      // increment 1: hold back half the input files (the
+      // file-granular resume treats files as the unit of work)
+      val pagesDir = new java.io.File(s"$tmp/pages")
+      val files = pagesDir.listFiles()
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        .sortBy(_.getName)
+      val hold = new java.io.File(s"$tmp/hold"); hold.mkdirs()
+      val held = files.drop(files.length / 2)
+      held.foreach(f => Files.move(f.toPath,
+        new java.io.File(hold, f.getName).toPath))
+      ExtractJob.run(spark, s"$tmp/pages", s"$tmp/out", numPartitions = 8)
+      // increment 2: the held files arrive; resume scans ONLY them
+      held.foreach(f => Files.move(new java.io.File(hold, f.getName).toPath,
+        new java.io.File(pagesDir, f.getName).toPath))
+      ExtractJob.run(spark, s"$tmp/pages", s"$tmp/out", numPartitions = 8)
+      // no-op resume: a 0-row snapshot with an empty partitions array
+      ExtractJob.run(spark, s"$tmp/pages", s"$tmp/out", numPartitions = 8)
+      // compaction: one clustered dir replacing the live chain
+      ExtractJob.compact(spark, s"$tmp/out"): Unit
     }
     s"$path/out"
   }
@@ -233,32 +172,30 @@ object GraftQueries {
   private def crawlDiffCached(spark: SparkSession, sfDir: String): String = {
     val rows = chainRowsFor(sfDir)
     val path = crawlDiffDumpPath(rows)
-    genLock.synchronized {
-      buildCachedDir(path) { tmp =>
-        ExtractJob.generatePages(spark, rows, s"$tmp/pages", partitions = 8)
-        val pages = spark.read.parquet(s"$tmp/pages")
-          .withColumn("idx",
-            expr("cast(regexp_extract(url, '/page/([0-9]+)$', 1) as long)"))
-        pages.filter(col("idx") < rows * 9L / 10).drop("idx")
-          .write.parquet(s"$tmp/pagesA")
-        // re-crawl mutation hits HTML payloads only: appending markup
-        // after a PDF's %%EOF corrupts the end-of-file xref scan and
-        // would flip a planted "changed" page into an extraction error
-        // (classified "gone"); junk payloads (first byte 0x7f) are
-        // byte-noise either way. Prefix test mirrors the mimetype
-        // sniff's dispatch.
-        val isHtml = expr("substring(html, 1, 5) != cast('%PDF-' as binary)") &&
-          expr("substring(html, 1, 1) != X'7F'")
-        pages.filter(col("idx") % 11 =!= 3)
-          .withColumn("html",
-            when(col("idx") % 7 === 0 && isHtml,
-              concat(col("html"), lit(UpdatePara.getBytes("UTF-8"))))
-              .otherwise(col("html")))
-          .drop("idx")
-          .write.parquet(s"$tmp/pagesB")
-        ExtractJob.run(spark, s"$tmp/pagesA", s"$tmp/outA", numPartitions = 8)
-        ExtractJob.run(spark, s"$tmp/pagesB", s"$tmp/outB", numPartitions = 8)
-      }
+    Staged.publishDir(path) { tmp =>
+      ExtractJob.generatePages(spark, rows, s"$tmp/pages", partitions = 8)
+      val pages = spark.read.parquet(s"$tmp/pages")
+        .withColumn("idx",
+          expr("cast(regexp_extract(url, '/page/([0-9]+)$', 1) as long)"))
+      pages.filter(col("idx") < rows * 9L / 10).drop("idx")
+        .write.parquet(s"$tmp/pagesA")
+      // re-crawl mutation hits HTML payloads only: appending markup
+      // after a PDF's %%EOF corrupts the end-of-file xref scan and
+      // would flip a planted "changed" page into an extraction error
+      // (classified "gone"); junk payloads (first byte 0x7f) are
+      // byte-noise either way. Prefix test mirrors the mimetype
+      // sniff's dispatch.
+      val isHtml = expr("substring(html, 1, 5) != cast('%PDF-' as binary)") &&
+        expr("substring(html, 1, 1) != X'7F'")
+      pages.filter(col("idx") % 11 =!= 3)
+        .withColumn("html",
+          when(col("idx") % 7 === 0 && isHtml,
+            concat(col("html"), lit(UpdatePara.getBytes("UTF-8"))))
+            .otherwise(col("html")))
+        .drop("idx")
+        .write.parquet(s"$tmp/pagesB")
+      ExtractJob.run(spark, s"$tmp/pagesA", s"$tmp/outA", numPartitions = 8)
+      ExtractJob.run(spark, s"$tmp/pagesB", s"$tmp/outB", numPartitions = 8)
     }
     path
   }
@@ -315,64 +252,9 @@ object GraftQueries {
   private val MixtureRates = Seq("eng" -> 1.0, "deu" -> 0.5, "fra" -> 0.25)
   private val MixtureDefaultRate = 0.125
 
-  /** Write `df` as a parquet dump at `path` atomically: write to a
-    * pid-suffixed temp dir, then rename into place. Two JVMs racing on
-    * the same key (e.g. Verify and Bench at the same sf) can no longer
-    * overwrite a dump mid-read — the loser's rename fails and its temp
-    * dir is discarded (ADVICE #5). Callers hold [[genLock]] for
-    * intra-JVM exclusion. */
-  private def atomicDump(df: DataFrame, path: String): Unit = {
-    import java.nio.file._
-    val dest = Paths.get(path)
-    if (Files.exists(dest.resolve("_SUCCESS"))) return
-    val tmp = Paths.get(path + ".tmp-" + ProcessHandle.current().pid())
-    df.write.mode("overwrite").parquet(tmp.toString)
-    try {
-      Files.createDirectories(dest.getParent)
-      Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
-    } catch {
-      case _: FileAlreadyExistsException | _: DirectoryNotEmptyException =>
-        if (Files.exists(dest.resolve("_SUCCESS"))) {
-          // another writer won the race; keep theirs, drop ours
-          deleteRecursively(tmp.toFile)
-        } else {
-          // dest is a CORRUPT leftover (present, no _SUCCESS — e.g. a
-          // crashed pre-atomic writer): replace it with our complete
-          // output instead of discarding the fresh data and reading
-          // the broken dump forever
-          deleteRecursively(dest.toFile)
-          try Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
-          catch { case _: FileAlreadyExistsException | _: DirectoryNotEmptyException =>
-            deleteRecursively(tmp.toFile) // a racing writer re-created it
-          }
-        }
-    }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
-  def extractedCached(spark: SparkSession, sfDir: String): DataFrame = {
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = extractedDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        // extractedPages shrinks scan splits for its CPU-bound pass;
-        // restore afterwards (round-3 ADVICE #3 — cache state must not
-        // leak conf into later queries' scan planning)
-        val prev = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-        try atomicDump(extractedPages(spark, sfDir), path)
-        finally prev match {
-          case Some(v) => spark.conf.set("spark.sql.files.maxPartitionBytes", v)
-          case None => spark.conf.unset("spark.sql.files.maxPartitionBytes")
-        }
-      }
-    }
-    spark.read.parquet(path)
-  }
+  def extractedCached(spark: SparkSession, sfDir: String): DataFrame =
+    withSplitBytes(spark)(cachedParquet(spark,
+      extractedDumpPath(graft.gen.PageGen.rowsForDir(sfDir)))(extractedPages(spark, sfDir)))
 
   /** LSH candidate-pair dump: the (a_id, b_id) output of MinHash
     * banding + bucket join over the documents table, materialized so
@@ -388,17 +270,15 @@ object GraftQueries {
     s"/tmp/graft_cands_cache/${Dedup.Version}-mh${Dedup.NumHashes}b${Dedup.Bands}sh2-rows$rows"
 
   def candsCached(spark: SparkSession, sfDir: String): DataFrame = {
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = candsDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        // bands cached: the pair join AND the bucket-cap audit read it
-        val bands = Dedup.minhashBands(t(spark, sfDir, "documents"), "doc_id", "text", 2).cache()
-        try {
-          atomicDump(Dedup.candidatePairs(bands), path)
-          Dedup.auditBucketCap(bands, path) // never a silent drop
-        } finally bands.unpersist(blocking = false)
-      }
+    val path = candsDumpPath(graft.gen.PageGen.rowsForDir(sfDir))
+    Staged.publishDir(path) { tmp =>
+      // bands cached: the pair join AND the bucket-cap audit read it
+      val bands = Dedup.minhashBands(t(spark, sfDir, "documents"), "doc_id", "text", 2).cache()
+      try {
+        Dedup.candidatePairs(bands).write.parquet(tmp)
+        // never a silent drop: the audit is published with the dump
+        Dedup.auditBucketCap(bands, tmp)
+      } finally bands.unpersist(blocking = false)
     }
     spark.read.parquet(path)
   }
@@ -444,15 +324,9 @@ object GraftQueries {
   def simhashDumpPath(rows: Int): String =
     s"/tmp/graft_cands_cache/${Dedup.Version}-simhash-sh2-rows$rows"
 
-  def simhashCached(spark: SparkSession, sfDir: String): DataFrame = {
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = simhashDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists())
-        atomicDump(Dedup.simhashCodes(t(spark, sfDir, "documents"), "doc_id", "text", 2), path)
-    }
-    spark.read.parquet(path)
-  }
+  def simhashCached(spark: SparkSession, sfDir: String): DataFrame =
+    cachedParquet(spark, simhashDumpPath(graft.gen.PageGen.rowsForDir(sfDir)))(
+      Dedup.simhashCodes(t(spark, sfDir, "documents"), "doc_id", "text", 2))
 
   /** ANN candidate dumps (the q20/q22 pattern for the embedding side):
     * the non-SQL blocking stage (SRP codes / IVF cells) materializes its
@@ -462,14 +336,8 @@ object GraftQueries {
     s"/tmp/graft_ann_cache/${graft.ops.Similarity.Version}-$tag-rows$rows"
 
   private def annCandsCached(spark: SparkSession, sfDir: String, tag: String)
-                            (build: => DataFrame): DataFrame = {
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = annDumpPath(tag, rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) atomicDump(build, path)
-    }
-    spark.read.parquet(path)
-  }
+                            (build: => DataFrame): DataFrame =
+    cachedParquet(spark, annDumpPath(tag, graft.gen.PageGen.rowsForDir(sfDir)))(build)
 
   /** The page-raster dump (q76 / SURVEY G2): every PDF payload's pages
     * rasterized to 8-bit BMPs, with Spark's ink-pixel CLAIM stored
@@ -482,28 +350,22 @@ object GraftQueries {
 
   def rasterCached(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = rasterDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        val pages = spark.read.parquet(pagesPath(spark, sfDir))
-          .select(col("url"), col("html")).as[(String, Array[Byte])]
-        val rastered = pages.flatMap { case (url, payload) =>
-          if (payload.length < 4 || payload(0) != '%' || payload(1) != 'P') Iterator.empty
-          else graft.pdf.PdfParser.extract(payload) match {
-            case Left(_) => Iterator.empty
-            case Right(res) => res.pageTexts.iterator.zipWithIndex.map { case (t, i) =>
-              (url, i,
-                graft.pdf.PageRaster.rasterize(t),
-                graft.pdf.PageRaster.inkCells(t) *
-                  graft.pdf.PageRaster.CellW * graft.pdf.PageRaster.CellH)
-            }
+    cachedParquet(spark, rasterDumpPath(graft.gen.PageGen.rowsForDir(sfDir))) {
+      val pages = spark.read.parquet(pagesPath(spark, sfDir))
+        .select(col("url"), col("html")).as[(String, Array[Byte])]
+      pages.flatMap { case (url, payload) =>
+        if (payload.length < 4 || payload(0) != '%' || payload(1) != 'P') Iterator.empty
+        else graft.pdf.PdfParser.extract(payload) match {
+          case Left(_) => Iterator.empty
+          case Right(res) => res.pageTexts.iterator.zipWithIndex.map { case (t, i) =>
+            (url, i,
+              graft.pdf.PageRaster.rasterize(t),
+              graft.pdf.PageRaster.inkCells(t) *
+                graft.pdf.PageRaster.CellW * graft.pdf.PageRaster.CellH)
           }
-        }.toDF("url", "page_no", "img", "ink_px")
-        atomicDump(rastered, path)
-      }
+        }
+      }.toDF("url", "page_no", "img", "ink_px")
     }
-    spark.read.parquet(path)
   }
 
   /** Deskew line dump (q79): every pdf page is re-rendered with a
@@ -528,30 +390,24 @@ object GraftQueries {
 
   def deskewCached(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = deskewDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        val pages = spark.read.parquet(pagesPath(spark, sfDir))
-          .select(col("url"), col("html")).as[(String, Array[Byte])]
-        val lines = pages.flatMap { case (url, payload) =>
-          if (payload.length < 4 || payload(0) != '%' || payload(1) != 'P') Iterator.empty
-          else graft.pdf.PdfParser.extract(payload) match {
-            case Left(_) => Iterator.empty
-            case Right(res) =>
-              val idx = url.substring(url.lastIndexOf('/') + 1).toLong
-              val planted = plantedSkewCenti(idx)
-              res.pageTexts.iterator.zipWithIndex.flatMap { case (t, i) =>
-                graft.pdf.Deskew.lines(
-                  graft.pdf.PageRaster.rasterizeSkewed(t, planted)).iterator
-                  .map(l => (url, i, l.angleCenti, l.pixels))
-              }
-          }
-        }.toDF("url", "page_no", "angle_centi", "px")
-        atomicDump(lines, path)
-      }
+    cachedParquet(spark, deskewDumpPath(graft.gen.PageGen.rowsForDir(sfDir))) {
+      val pages = spark.read.parquet(pagesPath(spark, sfDir))
+        .select(col("url"), col("html")).as[(String, Array[Byte])]
+      pages.flatMap { case (url, payload) =>
+        if (payload.length < 4 || payload(0) != '%' || payload(1) != 'P') Iterator.empty
+        else graft.pdf.PdfParser.extract(payload) match {
+          case Left(_) => Iterator.empty
+          case Right(res) =>
+            val idx = url.substring(url.lastIndexOf('/') + 1).toLong
+            val planted = plantedSkewCenti(idx)
+            res.pageTexts.iterator.zipWithIndex.flatMap { case (t, i) =>
+              graft.pdf.Deskew.lines(
+                graft.pdf.PageRaster.rasterizeSkewed(t, planted)).iterator
+                .map(l => (url, i, l.angleCenti, l.pixels))
+            }
+        }
+      }.toDF("url", "page_no", "angle_centi", "px")
     }
-    spark.read.parquet(path)
   }
 
   /** VLM classification ledger dump (q82): the transport-pluggable
@@ -573,22 +429,15 @@ object GraftQueries {
 
   def vlmCached(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = vlmDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        val pages = rasterCached(spark, sfDir)
-          .select(col("url"), col("page_no").cast("int"), col("img"),
-            element_at(array(VlmDomains.map(lit): _*),
-              (expr("cast(regexp_extract(url, '/page/([0-9]+)$', 1) as long)")
-                % 5).cast("int") + 1))
-          .as[(String, Int, Array[Byte], String)]
-        atomicDump(
-          graft.vlm.VlmStage.classifyPages(pages, graft.vlm.StubVlm).toDF(),
-          path)
-      }
+    cachedParquet(spark, vlmDumpPath(graft.gen.PageGen.rowsForDir(sfDir))) {
+      val pages = rasterCached(spark, sfDir)
+        .select(col("url"), col("page_no").cast("int"), col("img"),
+          element_at(array(VlmDomains.map(lit): _*),
+            (expr("cast(regexp_extract(url, '/page/([0-9]+)$', 1) as long)")
+              % 5).cast("int") + 1))
+        .as[(String, Int, Array[Byte], String)]
+      graft.vlm.VlmStage.classifyPages(pages, graft.vlm.StubVlm).toDF()
     }
-    spark.read.parquet(path)
   }
 
   /** Blob-detection dump (q92 / the reference's contour family,
@@ -605,34 +454,28 @@ object GraftQueries {
 
   def blobsCached(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = blobsDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        val pages = spark.read.parquet(pagesPath(spark, sfDir))
-          .select(col("url"), col("html")).as[(String, Array[Byte])]
-        val blobRows = pages.flatMap { case (url, payload) =>
-          if (payload.length < 4 || payload(0) != '%' || payload(1) != 'P') Iterator.empty
-          else graft.pdf.PdfParser.extract(payload) match {
-            case Left(_) => Iterator.empty
-            case Right(res) =>
-              val idx = url.substring(url.lastIndexOf('/') + 1).toLong
-              res.pageTexts.iterator.zipWithIndex.flatMap { case (t, i) =>
-                val expected = graft.pdf.PageRaster.expectedWordBoxes(t)
-                val expDigest = graft.pdf.Blobs.digest(
-                  expected.toSeq.map { case (x, y, w, h, _) => (y, x, w, h) })
-                graft.pdf.Blobs.detect(
-                  graft.pdf.PageRaster.rasterizeForm(t, idx, i)).iterator
-                  .map(b => (url, i, b.kind, b.x, b.y, b.w, b.h, b.inkPx,
-                    b.checked, expected.length, expDigest))
-              }
-          }
-        }.toDF("url", "page_no", "kind", "x", "y", "w", "h", "ink_px",
-          "checked", "n_words_expected", "words_digest_expected")
-        atomicDump(blobRows, path)
-      }
+    cachedParquet(spark, blobsDumpPath(graft.gen.PageGen.rowsForDir(sfDir))) {
+      val pages = spark.read.parquet(pagesPath(spark, sfDir))
+        .select(col("url"), col("html")).as[(String, Array[Byte])]
+      pages.flatMap { case (url, payload) =>
+        if (payload.length < 4 || payload(0) != '%' || payload(1) != 'P') Iterator.empty
+        else graft.pdf.PdfParser.extract(payload) match {
+          case Left(_) => Iterator.empty
+          case Right(res) =>
+            val idx = url.substring(url.lastIndexOf('/') + 1).toLong
+            res.pageTexts.iterator.zipWithIndex.flatMap { case (t, i) =>
+              val expected = graft.pdf.PageRaster.expectedWordBoxes(t)
+              val expDigest = graft.pdf.Blobs.digest(
+                expected.toSeq.map { case (x, y, w, h, _) => (y, x, w, h) })
+              graft.pdf.Blobs.detect(
+                graft.pdf.PageRaster.rasterizeForm(t, idx, i)).iterator
+                .map(b => (url, i, b.kind, b.x, b.y, b.w, b.h, b.inkPx,
+                  b.checked, expected.length, expDigest))
+            }
+        }
+      }.toDF("url", "page_no", "kind", "x", "y", "w", "h", "ink_px",
+        "checked", "n_words_expected", "words_digest_expected")
     }
-    spark.read.parquet(path)
   }
 
   /** Per-host sitemap.xml dump (q94 / the discovery side of the crawl
@@ -650,19 +493,13 @@ object GraftQueries {
 
   def sitemapsCached(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = sitemapsDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        val xmls = spark.read.parquet(pagesPath(spark, sfDir))
-          .select(expr("split_part(url, '/', 3)").as("host")).distinct()
-          .as[String]
-          .map(h => (h, graft.sources.Sitemaps.sitemapXml(h)))
-          .toDF("host", "xml")
-        atomicDump(xmls, path)
-      }
+    cachedParquet(spark, sitemapsDumpPath(graft.gen.PageGen.rowsForDir(sfDir))) {
+      spark.read.parquet(pagesPath(spark, sfDir))
+        .select(expr("split_part(url, '/', 3)").as("host")).distinct()
+        .as[String]
+        .map(h => (h, graft.sources.Sitemaps.sitemapXml(h)))
+        .toDF("host", "xml")
     }
-    spark.read.parquet(path)
   }
 
   /** Charset-sniff dump (q97 / the encoding-detection rung of the crawl
@@ -682,40 +519,34 @@ object GraftQueries {
 
   def charsetCached(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = charsetDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        val sniffed = spark.read.parquet(pagesPath(spark, sfDir))
-          .select(col("url"), col("html")).as[(String, Array[Byte])]
-          .mapPartitions { it =>
-            val md = java.security.MessageDigest.getInstance("MD5")
-            it.flatMap { case (url, html) =>
-              if (html.length == 0 || html(0) != '<') Iterator.empty
-              else {
-                val idx = url.substring(url.lastIndexOf('/') + 1).toLong
-                val variant = (idx % 6).toInt
-                val payload = graft.html.CharsetSniff.encodeVariant(html, variant)
-                val sn = graft.html.CharsetSniff.sniff(payload)
-                val decoded = graft.html.CharsetSniff.decode(payload, sn)
-                md.reset()
-                val dig = md.digest(decoded.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-                val headHex = {
-                  val n = math.min(192, payload.length)
-                  val sb = new java.lang.StringBuilder(n * 2)
-                  var i = 0
-                  while (i < n) { sb.append(f"${payload(i) & 0xFF}%02X"); i += 1 }
-                  sb.toString
-                }
-                Iterator((url, variant, headHex, sn.charset, sn.decl,
-                  dig.map(b => f"$b%02x").mkString))
+    cachedParquet(spark, charsetDumpPath(graft.gen.PageGen.rowsForDir(sfDir))) {
+      spark.read.parquet(pagesPath(spark, sfDir))
+        .select(col("url"), col("html")).as[(String, Array[Byte])]
+        .mapPartitions { it =>
+          val md = java.security.MessageDigest.getInstance("MD5")
+          it.flatMap { case (url, html) =>
+            if (html.length == 0 || html(0) != '<') Iterator.empty
+            else {
+              val idx = url.substring(url.lastIndexOf('/') + 1).toLong
+              val variant = (idx % 6).toInt
+              val payload = graft.html.CharsetSniff.encodeVariant(html, variant)
+              val sn = graft.html.CharsetSniff.sniff(payload)
+              val decoded = graft.html.CharsetSniff.decode(payload, sn)
+              md.reset()
+              val dig = md.digest(decoded.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+              val headHex = {
+                val n = math.min(192, payload.length)
+                val sb = new java.lang.StringBuilder(n * 2)
+                var i = 0
+                while (i < n) { sb.append(f"${payload(i) & 0xFF}%02X"); i += 1 }
+                sb.toString
               }
+              Iterator((url, variant, headHex, sn.charset, sn.decl,
+                dig.map(b => f"$b%02x").mkString))
             }
-          }.toDF("url", "variant", "head_hex", "detected", "decl", "decoded_md5")
-        atomicDump(sniffed, path)
-      }
+          }
+        }.toDF("url", "variant", "head_hex", "detected", "decl", "decoded_md5")
     }
-    spark.read.parquet(path)
   }
 
   /** Head-metadata dump (q98 / the WAT metadata-record surface, sibling
@@ -730,28 +561,22 @@ object GraftQueries {
 
   def headMetaCached(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = headMetaDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        val metas = spark.read.parquet(pagesPath(spark, sfDir))
-          .select(col("url"), col("html")).as[(String, Array[Byte])]
-          .mapPartitions { it =>
-            it.flatMap { case (url, html) =>
-              if (html.length == 0 || html(0) != '<') Iterator.empty
-              else {
-                val m = graft.html.HeadMeta.scan(
-                  new String(html, java.nio.charset.StandardCharsets.UTF_8))
-                Iterator((url, m.title, m.langAttr, m.hasDoctype,
-                  m.nScript, m.nStyle, m.nMeta))
-              }
+    cachedParquet(spark, headMetaDumpPath(graft.gen.PageGen.rowsForDir(sfDir))) {
+      spark.read.parquet(pagesPath(spark, sfDir))
+        .select(col("url"), col("html")).as[(String, Array[Byte])]
+        .mapPartitions { it =>
+          it.flatMap { case (url, html) =>
+            if (html.length == 0 || html(0) != '<') Iterator.empty
+            else {
+              val m = graft.html.HeadMeta.scan(
+                new String(html, java.nio.charset.StandardCharsets.UTF_8))
+              Iterator((url, m.title, m.langAttr, m.hasDoctype,
+                m.nScript, m.nStyle, m.nMeta))
             }
-          }.toDF("url", "title", "lang_attr", "has_doctype",
-            "n_script", "n_style", "n_meta")
-        atomicDump(metas, path)
-      }
+          }
+        }.toDF("url", "title", "lang_attr", "has_doctype",
+          "n_script", "n_style", "n_meta")
     }
-    spark.read.parquet(path)
   }
 
   /** Corpus token/bigram count tables (the extract-once/read-many
@@ -770,30 +595,18 @@ object GraftQueries {
     s"/tmp/graft_tok_cache/g${graft.gen.PageGen.GenVersion}-${graft.core.ExtractionVersion.current}-${graft.ops.TextStats.Version}-bi-rows$rows"
 
   /** (t, n_t): corpus unigram counts under the text-family tokenizer. */
-  def tokenCountsCached(spark: SparkSession, sfDir: String): DataFrame = {
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = tokenCountsDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists())
-        atomicDump(extractedPagesDocs(spark, sfDir)
-          .select(explode(graft.ops.TextStats.lowerToks(col("text"))).as("t"))
-          .groupBy(col("t")).agg(count(lit(1)).as("n_t")), path)
-    }
-    spark.read.parquet(path)
-  }
+  def tokenCountsCached(spark: SparkSession, sfDir: String): DataFrame =
+    cachedParquet(spark, tokenCountsDumpPath(graft.gen.PageGen.rowsForDir(sfDir)))(
+      extractedPagesDocs(spark, sfDir)
+        .select(explode(graft.ops.TextStats.lowerToks(col("text"))).as("t"))
+        .groupBy(col("t")).agg(count(lit(1)).as("n_t")))
 
   /** (a, b, n_ab): corpus bigram counts under the same tokenizer. */
-  def bigramCountsCached(spark: SparkSession, sfDir: String): DataFrame = {
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = bigramCountsDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists())
-        atomicDump(graft.ops.LmScore
-          .bigramOccurrences(extractedPagesDocs(spark, sfDir), "doc_id", "text")
-          .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_ab")), path)
-    }
-    spark.read.parquet(path)
-  }
+  def bigramCountsCached(spark: SparkSession, sfDir: String): DataFrame =
+    cachedParquet(spark, bigramCountsDumpPath(graft.gen.PageGen.rowsForDir(sfDir)))(
+      graft.ops.LmScore
+        .bigramOccurrences(extractedPagesDocs(spark, sfDir), "doc_id", "text")
+        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_ab")))
 
   /** (doc_id, n_bigrams, sum_p_micros, avg_p_micros): the q74 LM
     * scores, materialized once by the PRODUCTION [[graft.ops.LmScore]]
@@ -808,17 +621,11 @@ object GraftQueries {
   def lmScoresDumpPath(rows: Int): String =
     s"/tmp/graft_tok_cache/g${graft.gen.PageGen.GenVersion}-${graft.core.ExtractionVersion.current}-${graft.ops.TextStats.Version}-lm5-rows$rows"
 
-  def lmScoresCached(spark: SparkSession, sfDir: String): DataFrame = {
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = lmScoresDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists())
-        atomicDump(graft.ops.LmScore.score(
-          extractedPagesDocs(spark, sfDir), "doc_id", "text",
-          precomputedBi = Some(bigramCountsCached(spark, sfDir))), path)
-    }
-    spark.read.parquet(path)
-  }
+  def lmScoresCached(spark: SparkSession, sfDir: String): DataFrame =
+    cachedParquet(spark, lmScoresDumpPath(graft.gen.PageGen.rowsForDir(sfDir)))(
+      graft.ops.LmScore.score(
+        extractedPagesDocs(spark, sfDir), "doc_id", "text",
+        precomputedBi = Some(bigramCountsCached(spark, sfDir))))
 
   /** (word, n_tokens): every distinct word's tokenized length under
     * the trained q85 merges — the BPE model surface, materialized once
@@ -828,17 +635,9 @@ object GraftQueries {
   def bpeWordLengthsDumpPath(rows: Int): String =
     s"/tmp/graft_tok_cache/g${graft.gen.PageGen.GenVersion}-${graft.core.ExtractionVersion.current}-${graft.ops.TextStats.Version}-bpewl-rows$rows"
 
-  def bpeWordLengthsCached(spark: SparkSession, sfDir: String): DataFrame = {
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = bpeWordLengthsDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists())
-        atomicDump(
-          graft.ops.Bpe.encodeWordLengthsFromCounts(bpeWords(spark, sfDir)),
-          path)
-    }
-    spark.read.parquet(path)
-  }
+  def bpeWordLengthsCached(spark: SparkSession, sfDir: String): DataFrame =
+    cachedParquet(spark, bpeWordLengthsDumpPath(graft.gen.PageGen.rowsForDir(sfDir)))(
+      graft.ops.Bpe.encodeWordLengthsFromCounts(bpeWords(spark, sfDir)))
 
   /** SemDeDup dumps (q77): cell assignments under the deterministic
     * coarse quantizer, the floor-micros cell centroids, and the
@@ -851,26 +650,19 @@ object GraftQueries {
   private def semTag(kind: String) = s"semdedup-c$SemCells-$kind"
 
   private def semCached(spark: SparkSession, sfDir: String): (DataFrame, DataFrame, DataFrame) = {
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val aPath = annDumpPath(semTag("assign"), rows)
-    val bPath = annDumpPath(semTag("books"), rows)
-    val pPath = annDumpPath(semTag("pairs"), rows)
-    genLock.synchronized {
-      if (!Seq(aPath, bPath, pPath).forall(p => new java.io.File(s"$p/_SUCCESS").exists())) {
-        val e = t(spark, sfDir, "embeddings")
-        val cbs = Similarity.quantizer(e, "vec_id", "embedding",
-          nCells = SemCells, sampleSize = 2000)
-        val assign = Similarity.cellAssignments(e, "vec_id", "embedding", cbs)
-        atomicDump(assign, aPath)
-        atomicDump(Similarity.pqCodebookTable(spark, Array(cbs))
-          .select(col("cell"), col("cm")), bPath)
-        val a = spark.read.parquet(aPath)
-        atomicDump(a.select(col("cell"), col("id").as("a_id"))
-          .join(a.select(col("cell"), col("id").as("b_id")), Seq("cell"))
-          .filter(col("a_id") < col("b_id")), pPath)
-      }
-    }
-    (spark.read.parquet(aPath), spark.read.parquet(bPath), spark.read.parquet(pPath))
+    def dump(kind: String) = annDumpPath(semTag(kind), graft.gen.PageGen.rowsForDir(sfDir))
+    lazy val e = t(spark, sfDir, "embeddings")
+    lazy val cbs = Similarity.quantizer(e, "vec_id", "embedding",
+      nCells = SemCells, sampleSize = 2000)
+    val a = cachedParquet(spark, dump("assign"))(
+      Similarity.cellAssignments(e, "vec_id", "embedding", cbs))
+    val books = cachedParquet(spark, dump("books"))(
+      Similarity.pqCodebookTable(spark, Array(cbs)).select(col("cell"), col("cm")))
+    val pairs = cachedParquet(spark, dump("pairs"))(
+      a.select(col("cell"), col("id").as("a_id"))
+        .join(a.select(col("cell"), col("id").as("b_id")), Seq("cell"))
+        .filter(col("a_id") < col("b_id")))
+    (a, books, pairs)
   }
 
   /** Exact floor-micros squared L2 distance between an embedding column
@@ -895,19 +687,11 @@ object GraftQueries {
     * non-SQL stages; scoring reads ONLY these tables, so DuckDB
     * re-derives the whole ADC ranking. */
   private def pqCached(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val codesPath = annDumpPath(pqTag("codes"), rows)
-    val booksPath = annDumpPath(pqTag("books"), rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$codesPath/_SUCCESS").exists() ||
-          !new java.io.File(s"$booksPath/_SUCCESS").exists()) {
-        val e = t(spark, sfDir, "embeddings")
-        val cbs = Similarity.pqCodebooks(e, "vec_id", "embedding", m = PqM, ksub = PqKsub)
-        atomicDump(Similarity.pqEncode(e, "vec_id", "embedding", cbs), codesPath)
-        atomicDump(Similarity.pqCodebookTable(spark, cbs), booksPath)
-      }
-    }
-    (spark.read.parquet(codesPath), spark.read.parquet(booksPath))
+    def dump(kind: String) = annDumpPath(pqTag(kind), graft.gen.PageGen.rowsForDir(sfDir))
+    lazy val e = t(spark, sfDir, "embeddings")
+    lazy val cbs = Similarity.pqCodebooks(e, "vec_id", "embedding", m = PqM, ksub = PqKsub)
+    (cachedParquet(spark, dump("codes"))(Similarity.pqEncode(e, "vec_id", "embedding", cbs)),
+      cachedParquet(spark, dump("books"))(Similarity.pqCodebookTable(spark, cbs)))
   }
 
   /** IVFADC parameters (q78): IVF coarse cells + PQ-coded residuals,
@@ -926,22 +710,13 @@ object GraftQueries {
     * all exact integer arithmetic over these tables, so DuckDB
     * re-derives the WHOLE query — probes included. */
   private def ivfadcCached(spark: SparkSession, sfDir: String): (DataFrame, DataFrame, DataFrame) = {
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val cPath = annDumpPath(ivfadcTag("codes"), rows)
-    val qPath = annDumpPath(ivfadcTag("coarse"), rows)
-    val bPath = annDumpPath(ivfadcTag("books"), rows)
-    genLock.synchronized {
-      if (!Seq(cPath, qPath, bPath).forall(p => new java.io.File(s"$p/_SUCCESS").exists())) {
-        val e = t(spark, sfDir, "embeddings")
-        val (codes, coarse, books) = Similarity.ivfadcIndex(
-          e, "vec_id", "embedding", nCells = IvfadcCells, m = PqM,
-          ksub = PqKsub, assign = IvfadcAssign)
-        atomicDump(codes, cPath)
-        atomicDump(coarse, qPath)
-        atomicDump(books, bPath)
-      }
-    }
-    (spark.read.parquet(cPath), spark.read.parquet(qPath), spark.read.parquet(bPath))
+    def dump(kind: String) = annDumpPath(ivfadcTag(kind), graft.gen.PageGen.rowsForDir(sfDir))
+    lazy val (codes, coarse, books) = Similarity.ivfadcIndex(
+      t(spark, sfDir, "embeddings"), "vec_id", "embedding", nCells = IvfadcCells, m = PqM,
+      ksub = PqKsub, assign = IvfadcAssign)
+    (cachedParquet(spark, dump("codes"))(codes),
+      cachedParquet(spark, dump("coarse"))(coarse),
+      cachedParquet(spark, dump("books"))(books))
   }
 
   /** DuckDB mirror of [[Similarity.rankWithin]] over an ANN candidate
@@ -972,12 +747,7 @@ object GraftQueries {
 
   def mediaCached(spark: SparkSession, sfDir: String): DataFrame = {
     val rows = mediaRowsFor(sfDir)
-    val path = mediaDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists())
-        atomicDump(graft.multimodal.MediaOps.genMedia(spark, rows), path)
-    }
-    spark.read.parquet(path)
+    cachedParquet(spark, mediaDumpPath(rows))(graft.multimodal.MediaOps.genMedia(spark, rows))
   }
 
   def formsDumpPath(rows: Int): String =
@@ -988,29 +758,11 @@ object GraftQueries {
     * the whole raw corpus independently (round-2 VERDICT #2); now form
     * detection materializes once per (GenVersion, FormsVersion, rows)
     * and both scan the ~100x smaller detection table. */
-  def formsCached(spark: SparkSession, sfDir: String): DataFrame = {
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = formsDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        // shrink scan splits for the CPU-bound detection pass only —
-        // restore after so a cold build can't skew every later query's
-        // scan planning (round-3 ADVICE #3)
-        val prev = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-        spark.conf.set("spark.sql.files.maxPartitionBytes", (8L << 20).toString)
-        try
-          atomicDump(
-            graft.forms.FormDetector.detectTable(
-              ExtractJob.readPages(spark, pagesPath(spark, sfDir))),
-            path)
-        finally prev match {
-          case Some(v) => spark.conf.set("spark.sql.files.maxPartitionBytes", v)
-          case None => spark.conf.unset("spark.sql.files.maxPartitionBytes")
-        }
-      }
-    }
-    spark.read.parquet(path)
-  }
+  def formsCached(spark: SparkSession, sfDir: String): DataFrame =
+    withSplitBytes(spark)(cachedParquet(spark,
+      formsDumpPath(graft.gen.PageGen.rowsForDir(sfDir)))(
+      graft.forms.FormDetector.detectTable(
+        ExtractJob.readPages(spark, pagesPath(spark, sfDir)))))
 
   def anchorsDumpPath(rows: Int): String =
     s"/tmp/graft_anchors_cache/g${graft.gen.PageGen.GenVersion}-${graft.html.AnchorHarvest.Version}-rows$rows"
@@ -1024,22 +776,16 @@ object GraftQueries {
     * are pinned to 0x7f, PDFs to '%'). */
   def anchorsCached(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = anchorsDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        val pages = spark.read.parquet(pagesPath(spark, sfDir))
-          .select(col("url"), col("html")).as[(String, Array[Byte])]
-        val harvested = pages.flatMap { case (url, payload) =>
-          if (payload.length == 0 || payload(0) != '<') Iterator.empty
-          else graft.html.AnchorHarvest
-            .anchors(new String(payload, java.nio.charset.StandardCharsets.UTF_8))
-            .iterator.map { case (href, lbl) => (url, href, lbl) }
-        }.toDF("url", "link", "label")
-        atomicDump(harvested, path)
-      }
+    cachedParquet(spark, anchorsDumpPath(graft.gen.PageGen.rowsForDir(sfDir))) {
+      val pages = spark.read.parquet(pagesPath(spark, sfDir))
+        .select(col("url"), col("html")).as[(String, Array[Byte])]
+      pages.flatMap { case (url, payload) =>
+        if (payload.length == 0 || payload(0) != '<') Iterator.empty
+        else graft.html.AnchorHarvest
+          .anchors(new String(payload, java.nio.charset.StandardCharsets.UTF_8))
+          .iterator.map { case (href, lbl) => (url, href, lbl) }
+      }.toDF("url", "link", "label")
     }
-    spark.read.parquet(path)
   }
 
   def postingsDumpPath(rows: Int): String =
@@ -1051,16 +797,9 @@ object GraftQueries {
     * value-checks the build+encoding; q89 proves the materialized index
     * SERVES queries correctly (term-pruned parquet scan, answer
     * re-derived by the oracle from the corpus text, never the index). */
-  def postingsCached(spark: SparkSession, sfDir: String): DataFrame = {
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = postingsDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists())
-        atomicDump(graft.ops.Postings.shards(
-          extractedPagesDocs(spark, sfDir), "doc_id", "text", 1024), path)
-    }
-    spark.read.parquet(path)
-  }
+  def postingsCached(spark: SparkSession, sfDir: String): DataFrame =
+    cachedParquet(spark, postingsDumpPath(graft.gen.PageGen.rowsForDir(sfDir)))(
+      graft.ops.Postings.shards(extractedPagesDocs(spark, sfDir), "doc_id", "text", 1024))
 
   def positionalDumpPath(rows: Int): String =
     s"/tmp/graft_postings_cache/g${graft.gen.PageGen.GenVersion}-${graft.core.ExtractionVersion.current}-${graft.ops.Postings.Version}-pos-rows$rows"
@@ -1070,16 +809,9 @@ object GraftQueries {
     * Like q89, the oracle never reads it — phrase answers are
     * re-derived from the corpus text, so build AND serving are both
     * value-checked. */
-  def positionalCached(spark: SparkSession, sfDir: String): DataFrame = {
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = positionalDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists())
-        atomicDump(graft.ops.Postings.positional(
-          extractedPagesDocs(spark, sfDir), "doc_id", "text"), path)
-    }
-    spark.read.parquet(path)
-  }
+  def positionalCached(spark: SparkSession, sfDir: String): DataFrame =
+    cachedParquet(spark, positionalDumpPath(graft.gen.PageGen.rowsForDir(sfDir)))(
+      graft.ops.Postings.positional(extractedPagesDocs(spark, sfDir), "doc_id", "text"))
 
   def winnowDumpPath(rows: Int): String =
     s"/tmp/graft_postings_cache/g${graft.gen.PageGen.GenVersion}-${graft.core.ExtractionVersion.current}-${graft.ops.Winnowing.Version}-k${graft.ops.Winnowing.K}w${graft.ops.Winnowing.W}-rows$rows"
@@ -1092,17 +824,13 @@ object GraftQueries {
     * answers are re-derived from the corpus text, so the fingerprint
     * build AND the pair serving are both value-checked. */
   def winnowCached(spark: SparkSession, sfDir: String): DataFrame = {
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = winnowDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        atomicDump(graft.ops.Winnowing.fingerprints(
-          extractedPagesDocs(spark, sfDir), "doc_id", "text"), path)
-        // never a silent drop: record how many boilerplate fingerprint
-        // buckets the serving cap will exclude from this dump
-        graft.ops.Winnowing.auditFingerprintCap(
-          spark.read.parquet(path), path): Unit
-      }
+    val path = winnowDumpPath(graft.gen.PageGen.rowsForDir(sfDir))
+    Staged.publishDir(path) { tmp =>
+      graft.ops.Winnowing.fingerprints(
+        extractedPagesDocs(spark, sfDir), "doc_id", "text").write.parquet(tmp)
+      // never a silent drop: record how many boilerplate fingerprint
+      // buckets the serving cap will exclude, published with the dump
+      graft.ops.Winnowing.auditFingerprintCap(spark.read.parquet(tmp), tmp): Unit
     }
     spark.read.parquet(path)
   }
@@ -3009,16 +2737,13 @@ object GraftQueries {
     s"pagemh-${Dedup.Version}-g${graft.gen.PageGen.GenVersion}-${graft.core.ExtractionVersion.current}"
 
   def pageCandsCached(s: SparkSession, d: String): DataFrame = {
-    val rows = graft.gen.PageGen.rowsForDir(d)
-    val path = annDumpPath(pageCandsTag, rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        val bands = Dedup.minhashBands(extractedPagesDocs(s, d), "doc_id", "text", 2).cache()
-        try {
-          atomicDump(Dedup.candidatePairs(bands), path)
-          Dedup.auditBucketCap(bands, path)
-        } finally bands.unpersist(blocking = false)
-      }
+    val path = annDumpPath(pageCandsTag, graft.gen.PageGen.rowsForDir(d))
+    Staged.publishDir(path) { tmp =>
+      val bands = Dedup.minhashBands(extractedPagesDocs(s, d), "doc_id", "text", 2).cache()
+      try {
+        Dedup.candidatePairs(bands).write.parquet(tmp)
+        Dedup.auditBucketCap(bands, tmp)
+      } finally bands.unpersist(blocking = false)
     }
     s.read.parquet(path)
   }
@@ -3032,29 +2757,26 @@ object GraftQueries {
     s"incrmh-${Dedup.Version}-g${graft.gen.PageGen.GenVersion}-${graft.core.ExtractionVersion.current}"
 
   def incrCandsCached(s: SparkSession, d: String): DataFrame = {
-    val rows = graft.gen.PageGen.rowsForDir(d)
-    val path = annDumpPath(incrCandsTag, rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        val pages = extractedPagesDocs(s, d)
-        val cut = pages.agg(floor(max("doc_id") * 0.9).cast("long").as("cut"))
-        val withCut = pages.crossJoin(broadcast(cut))
-        // corpus bands computed HERE (not inside incrementalCandidates)
-        // so the bucket cap on the corpus side is audited into the dump
-        // sidecar like every other capped LSH path (round-4 ADVICE #3:
-        // a batch doc whose only matching bucket was dropped must not
-        // get a silently clean verdict)
-        val corpusBands = Dedup.minhashBands(
-          withCut.filter(col("doc_id") <= col("cut")).drop("cut"),
-          "doc_id", "text", shingleN = 2).persist()
-        try {
-          atomicDump(Dedup.incrementalCandidatesFromBands(
-            corpusBands,
-            withCut.filter(col("doc_id") > col("cut")).drop("cut"),
-            "doc_id", "text", shingleN = 2), path)
-          Dedup.auditBucketCap(corpusBands, path)
-        } finally corpusBands.unpersist(blocking = false)
-      }
+    val path = annDumpPath(incrCandsTag, graft.gen.PageGen.rowsForDir(d))
+    Staged.publishDir(path) { tmp =>
+      val pages = extractedPagesDocs(s, d)
+      val cut = pages.agg(floor(max("doc_id") * 0.9).cast("long").as("cut"))
+      val withCut = pages.crossJoin(broadcast(cut))
+      // corpus bands computed HERE (not inside incrementalCandidates)
+      // so the bucket cap on the corpus side is audited into the dump
+      // sidecar like every other capped LSH path (round-4 ADVICE #3:
+      // a batch doc whose only matching bucket was dropped must not
+      // get a silently clean verdict)
+      val corpusBands = Dedup.minhashBands(
+        withCut.filter(col("doc_id") <= col("cut")).drop("cut"),
+        "doc_id", "text", shingleN = 2).persist()
+      try {
+        Dedup.incrementalCandidatesFromBands(
+          corpusBands,
+          withCut.filter(col("doc_id") > col("cut")).drop("cut"),
+          "doc_id", "text", shingleN = 2).write.parquet(tmp)
+        Dedup.auditBucketCap(corpusBands, tmp)
+      } finally corpusBands.unpersist(blocking = false)
     }
     s.read.parquet(path)
   }
@@ -3092,6 +2814,7 @@ object GraftQueries {
     sitemapsCached(spark, sfDir)
     charsetCached(spark, sfDir)
     headMetaCached(spark, sfDir)
+    warcCached(spark, sfDir): Unit
     wetCached(spark, sfDir): Unit
     chainCached(spark, sfDir): Unit
     crawlDiffCached(spark, sfDir): Unit
@@ -3154,20 +2877,12 @@ object GraftQueries {
   def entitiesDumpPath(rows: Int): String =
     s"/tmp/graft_entities_cache/g${graft.gen.PageGen.GenVersion}-${graft.core.ExtractionVersion.current}-${graft.nlp.EntityMatcher.Version}-rows$rows"
 
-  def entitiesCached(spark: SparkSession, sfDir: String): DataFrame = {
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = entitiesDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists())
-        atomicDump(
-          graft.nlp.EntityStage.explodeEntities(
-            extractedCached(spark, sfDir)
-              .filter(col("error").isNull && col("payload_kind") === "html"),
-            "url", "extracted_text"),
-          path)
-    }
-    spark.read.parquet(path)
-  }
+  def entitiesCached(spark: SparkSession, sfDir: String): DataFrame =
+    cachedParquet(spark, entitiesDumpPath(graft.gen.PageGen.rowsForDir(sfDir)))(
+      graft.nlp.EntityStage.explodeEntities(
+        extractedCached(spark, sfDir)
+          .filter(col("error").isNull && col("payload_kind") === "html"),
+        "url", "extracted_text"))
 
   /** NER candidate dump (url, label, text, start): one row per
     * capitalized-run candidate from the SAME [[graft.nlp.Ner.candidates]]
@@ -3180,20 +2895,12 @@ object GraftQueries {
   def nerDumpPath(rows: Int): String =
     s"/tmp/graft_ner_cache/g${graft.gen.PageGen.GenVersion}-${graft.core.ExtractionVersion.current}-${graft.nlp.Ner.Version}-rows$rows"
 
-  def nerCached(spark: SparkSession, sfDir: String): DataFrame = {
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = nerDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists())
-        atomicDump(
-          graft.nlp.EntityStage.explodeNerCandidates(
-            extractedCached(spark, sfDir)
-              .filter(col("error").isNull && col("payload_kind") === "html"),
-            "url", "extracted_text"),
-          path)
-    }
-    spark.read.parquet(path)
-  }
+  def nerCached(spark: SparkSession, sfDir: String): DataFrame =
+    cachedParquet(spark, nerDumpPath(graft.gen.PageGen.rowsForDir(sfDir)))(
+      graft.nlp.EntityStage.explodeNerCandidates(
+        extractedCached(spark, sfDir)
+          .filter(col("error").isNull && col("payload_kind") === "html"),
+        "url", "extracted_text"))
 
   /** Per-doc curation features (repetition fractions + gate + quality
     * score) materialized once over the extraction dump — the projection
@@ -3203,24 +2910,16 @@ object GraftQueries {
   def repDumpPath(rows: Int): String =
     s"/tmp/graft_rep_cache/g${graft.gen.PageGen.GenVersion}-${graft.core.ExtractionVersion.current}-${graft.ops.Repetition.Version}-${graft.ops.TextStats.Version}-rows$rows"
 
-  def repCached(spark: SparkSession, sfDir: String): DataFrame = {
-    val rows = graft.gen.PageGen.rowsForDir(sfDir)
-    val path = repDumpPath(rows)
-    genLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        val base = extractedCached(spark, sfDir)
-          .filter(col("error").isNull && col("payload_kind") === "html" &&
-            length(col("extracted_text")) > 0)
-          .select(col("url"), col("extracted_text"))
-        atomicDump(
-          Repetition.withStats(base, textCol = "extracted_text")
-            .withColumn("quality", TextStats.qualityScore(col("extracted_text")))
-            .drop("extracted_text"),
-          path)
-      }
+  def repCached(spark: SparkSession, sfDir: String): DataFrame =
+    cachedParquet(spark, repDumpPath(graft.gen.PageGen.rowsForDir(sfDir))) {
+      val base = extractedCached(spark, sfDir)
+        .filter(col("error").isNull && col("payload_kind") === "html" &&
+          length(col("extracted_text")) > 0)
+        .select(col("url"), col("extracted_text"))
+      Repetition.withStats(base, textCol = "extracted_text")
+        .withColumn("quality", TextStats.qualityScore(col("extracted_text")))
+        .drop("extracted_text")
     }
-    spark.read.parquet(path)
-  }
 
   // =====================================================================
   // DuckDB oracles
